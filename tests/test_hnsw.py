@@ -44,11 +44,13 @@ def test_build_matches_numpy_twin(spark, sf_dir):
 
 
 def test_build_is_collect_free(spark, sf_dir, monkeypatch):
-    """VERDICT r7 #2's done-criterion: zero edge-list `.collect()` in
-    the build path. Intercept DataFrame.collect during hnsw_build and
+    """VERDICT r7 #2's done-criterion, for the Spark build route (the
+    only route above DRIVER_BUILD_MAX_VALUES): zero edge-list
+    `.collect()`. Intercept DataFrame.collect during hnsw_build and
     assert the only collected frame is the ≤16-row level histogram."""
     from pyspark.sql import DataFrame
 
+    monkeypatch.setattr(hnsw, "DRIVER_BUILD_MAX_VALUES", 0)
     seen = []
     orig = DataFrame.collect
 
@@ -59,6 +61,7 @@ def test_build_is_collect_free(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "collect", spy)
     art = hnsw.hnsw_build(spark, _corpus(spark, sf_dir))
+    assert art["route"] == "spark"
     assert isinstance(art["tops"], DataFrame)
     for df in art["adj"].values():
         assert isinstance(df, DataFrame)
@@ -456,10 +459,10 @@ def _ml_corpus(spark):
         "vec_id bigint, vec array<double>")
 
 
-def _ml_twin_parts(ids):
+def _ml_twin_parts(ids, vec=_ml_vec):
     import numpy as np
 
-    X = np.array([_ml_vec(i) for i in ids], dtype=np.float64)
+    X = np.array([vec(i) for i in ids], dtype=np.float64)
     idx_of = {i: n for n, i in enumerate(ids)}
     nrm2 = np.zeros(len(ids), dtype=np.float64)
     for j in range(X.shape[1]):
@@ -482,6 +485,98 @@ def test_multilayer_build_matches_twin(spark):
     for level in art["adj"]:
         assert art["adj"][level] == twin["adj"][level], \
             f"layer {level} diverged"
+
+
+# ---- build routes: the driver route (numpy, default below the cap),
+# the forced Spark route and the numpy twin must give the same graph.
+# 300-node corpora exceed ALL_PAIRS_MAX, so NN-Descent rounds run.
+
+def _dup_vec(i):
+    return _ml_vec(i % 40)  # 40 distinct vectors: exact score ties
+
+
+def _zero_vec(i):
+    return [0.0] * 8 if i == 5 else _ml_vec(i)  # NULL cosines
+
+
+def _tiny_vec(i):
+    return [float(i + 1), 1.0, 0.0, 0.5]
+
+
+_BUILD_CORPORA = {
+    "multilayer": (_ml_ids, _ml_vec),
+    "tiny": (lambda: [0, 1, 2], _tiny_vec),
+    "duplicates": (lambda: list(range(300)), _dup_vec),
+    "zero_vector": (lambda: list(range(300)), _zero_vec),
+}
+
+
+@pytest.mark.parametrize("name", ["sf", *_BUILD_CORPORA])
+def test_build_routes_and_twin_agree(spark, sf_dir, monkeypatch, name):
+    """Driver route, forced Spark route and twin: identical L, tops
+    and adj. Each artifact records the route that built it; the
+    driver route's DataFrame handles collect to its own plain lists."""
+    if name == "sf":
+        corpus = _corpus(spark, sf_dir)
+        twin = hnsw._twin_build(sf_dir)
+    else:
+        ids_fn, vec = _BUILD_CORPORA[name]
+        ids = ids_fn()
+        corpus = spark.createDataFrame(
+            [(i, vec(i)) for i in ids], "vec_id bigint, vec array<double>")
+        twin = hnsw._twin_art(ids, *_ml_twin_parts(ids, vec))
+    drv = hnsw.hnsw_build(spark, corpus)
+    assert drv["route"] == "driver"
+    assert hnsw.collect_art(drv)["adj"] == drv["plain"]["adj"]
+    monkeypatch.setattr(hnsw, "DRIVER_BUILD_MAX_VALUES", 0)
+    dist = hnsw.hnsw_build(spark, corpus)
+    assert dist["route"] == "spark" and "plain" not in dist
+    dist = hnsw.collect_art(dist)
+    for key in ("L", "tops", "adj"):
+        assert drv["plain"][key] == dist[key] == twin[key], key
+
+
+def test_session_art_uses_driver_build_lists(spark, sf_dir, monkeypatch):
+    """A driver-built graph hands its own plain lists to the
+    driver-beam probes: session_art never counts or collects the
+    read-back artifact."""
+    def no_collect(art):
+        raise AssertionError("collect_art called")
+
+    monkeypatch.setattr(hnsw, "_ART_CACHE", {})
+    monkeypatch.setattr(hnsw, "_SESSION_ART", {})
+    monkeypatch.setattr(hnsw, "collect_art", no_collect)
+    art = hnsw.art_for(spark, sf_dir)
+    assert art["route"] == "driver"
+    assert hnsw.session_art(spark, sf_dir)["plain"] is art["plain"]
+
+
+def test_probe_routes_agree_on_zero_vectors(spark):
+    """NULL cosines (a zero corpus vector, a zero query) rank last in
+    every probe, as the distributed probes' orderBy(score desc, id)
+    ranks them — the driver beams must not fail on them."""
+    ids = list(range(300))
+    corpus = spark.createDataFrame([(i, _zero_vec(i)) for i in ids],
+                                   "vec_id bigint, vec array<double>")
+    art = hnsw.hnsw_build(spark, corpus)["plain"]
+    for qvec in ([0.0] * 8, _ml_vec(5)):
+        q = spark.createDataFrame([(qvec,)], "qvec array<double>")
+        dist = [tuple(r) for r in
+                hnsw.hnsw_probe(spark, corpus, art, q, k=10).collect()]
+        drv = [tuple(r) for r in
+               hnsw.hnsw_probe_driver(spark, corpus, art, qvec,
+                                      k=10).collect()]
+        assert dist == drv and len(drv) == 10
+    queries = spark.createDataFrame(
+        [(0, [0.0] * 8), (1, _ml_vec(5))], "qid bigint, qvec array<double>")
+    dist = [tuple(r) for r in
+            hnsw.hnsw_probe_batch(spark, corpus, art, queries, k=10)
+            .collect()]
+    drv = [tuple(r) for r in
+           hnsw.hnsw_probe_batch_driver(spark, corpus, art, queries, k=10)
+           .collect()]
+    assert dist == drv
+    assert [s for q, _, s, _ in drv if q == 0] == [None] * 10
 
 
 def test_multilayer_probe_routes_agree(spark):

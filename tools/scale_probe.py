@@ -12,6 +12,16 @@ Usage:
     python tools/scale_probe.py build [N]          # default N=64
     python tools/scale_probe.py run q1 q2 ...      # 1x vs Nx timings
     python tools/scale_probe.py run --all-docs     # doc/embedding ops
+    python tools/scale_probe.py build-hnsw N [SEED]  # HNSW build routes
+
+`build-hnsw N` writes a seeded N x 64 gaussian corpus to a temp dir,
+builds its HNSW graph once per hnsw_build route (driver, then Spark
+with the size cap forced to 0) on local[nproc] after an untimed
+warm-up build, and prints per route the wall seconds, process-tree
+CPU seconds (this process plus the JVM and Python workers) and the
+driver process's peak RSS growth, then whether the two graphs'
+edges are identical. docs/SCALE.md "Driver-built HNSW" holds the
+table DRIVER_BUILD_MAX_VALUES is set from.
 
 Replicas live in /tmp/uvdb_scale_{N}x (ids shifted per replica so
 join/dedup keys stay distinct; texts perturbed so exact dedup does
@@ -141,9 +151,93 @@ def build(spark, n: int) -> str:
     return big
 
 
+def _tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and its descendants."""
+    kids: dict[int, list[int]] = {}
+    for e in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{e}/stat") as f:
+                st = f.read()
+        except OSError:  # exited during the scan
+            continue
+        kids.setdefault(int(st[st.rindex(")") + 2:].split()[1]),
+                        []).append(int(e))
+    total, todo = 0, list(kids.get(os.getpid(), ()))
+    while todo:
+        pid = todo.pop()
+        todo.extend(kids.get(pid, ()))
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                st = f.read()
+        except OSError:
+            continue
+        total += sum(int(x) for x in st[st.rindex(")") + 2:].split()[11:15])
+    return time.process_time() + total / os.sysconf("SC_CLK_TCK")
+
+
+def _rss_kb(field: str) -> int:
+    with open("/proc/self/status") as f:
+        return int(next(ln for ln in f if ln.startswith(field)).split()[1])
+
+
+def build_hnsw(n: int, seed: int) -> None:
+    """Time both hnsw_build routes on a seeded n-vector corpus."""
+    import shutil
+    import tempfile
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unified_vector_database_spark.functions import distance as D
+    from unified_vector_database_spark.operators import hnsw
+
+    cpus = os.cpu_count() or 1
+    spark = get_spark("uvdb-hnsw-build-probe", cpus=cpus,
+                      shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    x = np.random.default_rng(seed).standard_normal((n, 64), np.float32)
+    d = tempfile.mkdtemp(prefix="uvdb_hnsw_probe_")
+    pq.write_table(pa.table({"vec_id": np.arange(n, dtype=np.int64),
+                             "embedding": list(x)}), f"{d}/emb.parquet")
+    corpus = spark.read.parquet(f"{d}/emb.parquet").select(
+        "vec_id", D.vec_double("embedding").alias("vec"))
+    cap, plains = hnsw.DRIVER_BUILD_MAX_VALUES, {}
+    try:
+        # untimed warm-up of both routes (JIT, first-job set-up)
+        warm = corpus.where(corpus.vec_id < 300)
+        hnsw.hnsw_build(spark, warm)
+        hnsw.DRIVER_BUILD_MAX_VALUES = 0
+        hnsw.hnsw_build(spark, warm)
+        for route, limit in (("driver", n * 64), ("spark", 0)):
+            hnsw.DRIVER_BUILD_MAX_VALUES = limit
+            with open("/proc/self/clear_refs", "w") as f:
+                f.write("5")  # reset VmHWM to the current RSS
+            rss0 = _rss_kb("VmRSS")
+            cpu0, t0 = _tree_cpu_s(), time.perf_counter()
+            art = hnsw.hnsw_build(spark, corpus)
+            wall, cpu = time.perf_counter() - t0, _tree_cpu_s() - cpu0
+            peak = (_rss_kb("VmHWM") - rss0) / 1024
+            if art["route"] != route:
+                raise RuntimeError(f"{route} build ran {art['route']}")
+            plains[route] = hnsw.collect_art(art)
+            print(f"build-hnsw n={n} dim=64 route={route} "
+                  f"wall_s={wall:.2f} cpu_s={cpu:.2f} "
+                  f"driver_peak_mb={peak:+.0f}", flush=True)
+    finally:
+        hnsw.DRIVER_BUILD_MAX_VALUES = cap
+        shutil.rmtree(d, ignore_errors=True)
+    same = all(plains["driver"][k] == plains["spark"][k]
+               for k in ("L", "tops", "adj"))
+    print(f"build-hnsw n={n} edges_identical={same}")
+
+
 def main() -> int:
     args = sys.argv[1:]
     n = 64
+    if args and args[0] == "build-hnsw" and len(args) > 1:
+        build_hnsw(int(args[1]), int(args[2]) if len(args) > 2 else 7)
+        return 0
     registry.load_all()
     spark = get_spark("uvdb-scale-probe", cpus=16, shuffle_partitions=16)
     if args and args[0] == "build":

@@ -35,16 +35,29 @@ primitives and probes it with the SAME beam-search contract:
            exact rerank of the visited set yields top-k. Every hop is
            a frontier-to-adjacency join co-keyed on the source id.
 
+Two build routes, one graph. `hnsw_build` reads the level histogram
+(one job: n, dim and L) and size-switches on n·dim:
+  driver — corpora ≤ DRIVER_BUILD_MAX_VALUES components collect their
+           vectors once and run the same levels, init buckets,
+           NN-Descent rounds and top-M as one vectorized numpy pass
+           (`_np_layer_graph`) — one job after the histogram,
+           where the Spark route runs ~45 at 500 vectors;
+  spark  — larger corpora run the join/groupBy rounds below and never
+           collect an edge.
+Both return the same artifact shape and bit-identical edges; the
+artifact records which route built it.
+
 100 TB shape: the adjacency list is the index artifact — N*M id
-pairs. `hnsw_build` never collects an edge: each layer's edges stay
-a DataFrame, `hnsw_write` materializes them as a parquet artifact
-partitioned by `bucket = pmod(src, ADJ_BUCKETS)`, and `hnsw_read`
-hands back lazy handles. A probe hop joins the bounded frontier
-(which carries the same bucket key) against the artifact, so the
-scan prunes to the frontier's buckets instead of walking all
-partitions (see tests/test_hnsw.py::test_probe_from_written_artifact
-for the end-to-end no-collect path). Build cost is bounded: LSH
-bucket size is capped (BUCKET_CAP), NN-Descent candidate growth is
+pairs. Above the driver cap `hnsw_build` never collects an edge:
+each layer's edges stay a DataFrame, `hnsw_write` materializes them
+as a parquet artifact partitioned by `bucket = pmod(src,
+ADJ_BUCKETS)`, and `hnsw_read` hands back lazy handles. A probe hop
+joins the bounded frontier (which carries the same bucket key)
+against the artifact, so the scan prunes to the frontier's buckets
+instead of walking all partitions (see
+tests/test_hnsw.py::test_probe_from_written_artifact for the
+end-to-end no-collect path). Build cost is bounded: LSH bucket size
+is capped (BUCKET_CAP), NN-Descent candidate growth is
 (2M)^2 per node per round, and the round count is fixed — no step is
 ever corpus x corpus. The layer-l node set shrinks 16x per level, so
 the top-layer exact scan a probe starts from is O(N / 16^L) ~=
@@ -55,9 +68,10 @@ the bucket-partitioned artifact/corpus layout that join reads only
 the frontier's buckets; on an unpartitioned corpus it is a pruned
 but full-listing scan (linear in file count, constant in rows
 scored). The registered probe size-switches (the D12 pattern):
-corpora ≤ DRIVER_BEAM_MAX_NODES collect the bounded artifact once
-per session and run the beam driver-side; larger corpora route
-through the distributed `hnsw_probe`, which never collects edges.
+corpora ≤ DRIVER_BEAM_MAX_NODES run the beam driver-side over the
+plain edge lists — the driver build's own, else the artifact
+collected once per session; larger corpora route through the
+distributed `hnsw_probe`, which never collects edges.
 
 Determinism & oracle: every choice (LSH planes, bucket caps, level
 hash, (score, id) tie-breaks) is seeded/deterministic, so the whole
@@ -107,6 +121,19 @@ DRIVER_BEAM_MAX_NODES = 250_000
 # exactly n·M would spuriously refuse corpora in the top ~6% of the
 # node band (review-caught). ~2.14M id pairs ≈ 34 MB at the default M.
 DRIVER_BEAM_MAX_EDGES = DRIVER_BEAM_MAX_NODES * HNSW_M * 16 // 15 + 1
+# Corpora of at most this many vector components (n·dim, both read
+# off the level histogram) build on the driver: one collect, then the
+# identical graph as one vectorized numpy pass instead of ~10 eager
+# jobs per NN-Descent round. Measured with `tools/scale_probe.py
+# build-hnsw N` on 4 cores (table in docs/SCALE.md "Driver-built
+# HNSW"): the driver route won at every size, 500 to 65,536 vectors
+# of dim 64 (26.5 s wall / 31 s CPU vs 216 s / 769 s at 65,536), so
+# there is no local crossover and the cap comes from driver cost. At
+# 2^22 components (65,536 x 64) the driver peak grows by 238 MB and
+# one core's 26.5 s equals the Spark route's CPU spread perfectly over
+# ~30 executor cores — past that a small cluster builds faster, and
+# driver memory keeps growing ~3.6 KB per vector.
+DRIVER_BUILD_MAX_VALUES = 1 << 22
 
 
 # ------------------------------------------------------------- build
@@ -117,13 +144,17 @@ def _level_col(id_col: str) -> F.Column:
         F.regexp_extract(F.md5(F.col(id_col).cast("string")), "^(0*)", 1))
 
 
-def _init_bucket_col(id_col: str, t: F.Column, n_buckets: int) -> F.Column:
-    """Data-oblivious partner bucket: md5(id:t) mod B. 60 hash bits
-    (15 hex chars) keep the conv() result inside a signed long."""
+def _init_hash_col(id_col: str, t: F.Column) -> F.Column:
+    """Data-oblivious init hash of (id, table t): 60 bits of md5(id:t)
+    (15 hex chars keep the conv() result inside a signed long)."""
     h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":"),
                        t.cast("string")))
-    return F.pmod(F.conv(F.substring(h, 1, 15), 16, 10).cast("long"),
-                  F.lit(n_buckets))
+    return F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
+
+
+def _init_bucket_col(id_col: str, t: F.Column, n_buckets: int) -> F.Column:
+    """Partner bucket: the init hash mod B."""
+    return F.pmod(_init_hash_col(id_col, t), F.lit(n_buckets))
 
 
 def _topm(pairs: DataFrame, id_col: str) -> DataFrame:
@@ -201,19 +232,187 @@ def _layer_graph(nodes: DataFrame, n: int) -> DataFrame:
     return edges
 
 
+# Candidate pairs the driver route scores at once: NN-Descent rounds
+# run over blocks of sources whose candidate volume stays near this,
+# so driver memory is bounded by the block, not the layer.
+_NP_BLOCK_PAIRS = 1 << 18
+
+
+def _ragged(starts, counts):
+    """Concatenation of arange(s, s + c) over (starts, counts)."""
+    import numpy as np
+
+    offs = np.cumsum(counts) - counts
+    return np.arange(int(counts.sum())) + np.repeat(starts - offs, counts)
+
+
+def _np_topm(s, d, XT, nrm):
+    """Driver twin of `_topm(_scored(...))` over unique local-index
+    pairs: cosine by the dimension-ordered fold `D.cosine` evaluates
+    (bit-identical doubles), NULL where `try_divide` would see a zero
+    denominator, then the best HNSW_M per src in Spark's (score DESC
+    NULLS LAST, dst) order — NaN sorts above every number there, so it
+    ranks first. Returns (src, dst) grouped by src."""
+    import numpy as np
+
+    acc = np.zeros(len(s))
+    for row in XT:
+        acc = acc + row[s] * row[d]
+    den = nrm[s] * nrm[d]
+    null = den == 0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        score = acc / den
+    nan = np.isnan(score) & ~null
+    cls = np.where(nan, 0, np.where(null, 2, 1))
+    order = np.lexsort((d, np.where(cls == 1, -score, 0.0), cls, s))
+    s, d = s[order], d[order]
+    rank = np.arange(len(s)) - np.searchsorted(s, s)
+    keep = rank < HNSW_M
+    return s[keep], d[keep]
+
+
+def _np_layer_graph(XT, nrm, H):
+    """`_layer_graph` on the driver for one layer's n nodes (local
+    indices in vec_id order; XT is the dim×n matrix, H the
+    INIT_TABLES×n init hashes): the same init pairs, NN-Descent rounds
+    and top-M, as whole-array numpy steps."""
+    import numpy as np
+
+    n = XT.shape[1]
+    if n <= ALL_PAIRS_MAX:
+        s, d = np.divmod(np.arange(n * n), n)
+        off = s != d
+        return _np_topm(s[off], d[off], XT, nrm)
+    n_buckets = max(1, math.ceil(n / INIT_BUCKET))
+    codes = []
+    for t in range(INIT_TABLES):
+        b = H[t] % n_buckets
+        order = np.argsort(b, kind="stable")
+        _, first, cnt = np.unique(b[order], return_index=True,
+                                  return_counts=True)
+        g = np.repeat(np.arange(len(cnt)), cnt)
+        rc = np.minimum(cnt, BUCKET_CAP)[g]
+        src = np.repeat(order, rc)
+        dst = order[_ragged(first[g], rc)]
+        codes.append(src[src != dst] * n + dst[src != dst])
+    c = np.unique(np.concatenate(codes))
+    es, ed = _np_topm(c // n, c % n, XT, nrm)
+    for _ in range(HNSW_ROUNDS):
+        sym = np.unique(np.concatenate([es * n + ed, ed * n + es]))
+        ss, sd = sym // n, sym % n
+        ptr = np.searchsorted(ss, np.arange(n + 1))
+        deg = np.diff(ptr)
+        eptr = np.searchsorted(es, np.arange(n + 1))
+        # per-src candidate volume (two-hop pairs + own edges) cuts the
+        # sources into blocks; candidates never cross a src, so each
+        # block's top-M is final
+        vol = (np.bincount(ss, weights=deg[sd], minlength=n)
+               .astype(np.int64) + np.diff(eptr))
+        blk = (np.cumsum(vol) - vol) // _NP_BLOCK_PAIRS
+        cuts = [0, *(np.flatnonzero(np.diff(blk)) + 1).tolist(), n]
+        out_s, out_d = [], []
+        for a, b in zip(cuts, cuts[1:]):
+            r = np.arange(ptr[a], ptr[b])
+            mids = sd[r]
+            cs = np.concatenate([np.repeat(ss[r], deg[mids]),
+                                 es[eptr[a]:eptr[b]]])
+            cd = np.concatenate([sd[_ragged(ptr[mids], deg[mids])],
+                                 ed[eptr[a]:eptr[b]]])
+            c = np.unique(cs[cs != cd] * n + cd[cs != cd])
+            bs, bd = _np_topm(c // n, c % n, XT, nrm)
+            out_s.append(bs)
+            out_d.append(bd)
+        es, ed = np.concatenate(out_s), np.concatenate(out_d)
+    return es, ed
+
+
+def _nbr_maps(adj: dict) -> dict:
+    """{level: {src: [dst, ...]}} from (src, dst)-sorted edge lists —
+    the form the driver beams walk."""
+    maps: dict[int, dict[int, list[int]]] = {}
+    for lvl, pairs in adj.items():
+        m: dict[int, list[int]] = {}
+        for s, d in pairs:
+            m.setdefault(s, []).append(d)
+        maps[lvl] = m
+    return maps
+
+
+def _plain_art(big_l: int, n, tops: list, adj: dict) -> dict:
+    """The driver-resident artifact: sorted tops, (src, dst)-sorted
+    edge lists per level, and their neighbor maps, built once here so
+    no probe rebuilds them from the edge lists per query."""
+    return {"L": big_l, "n": n, "tops": tops, "adj": adj,
+            "nbrs": _nbr_maps(adj)}
+
+
+def _driver_build(spark: SparkSession, nodes: DataFrame, big_l: int,
+                  dim: int) -> dict:
+    """hnsw_build's driver route: collect (vec_id, vec, level, init
+    hashes) once, Arrow-batched where the session enables it — levels
+    and hashes come from the same Spark expressions the Spark route
+    uses — and build every layer with `_np_layer_graph`. The DataFrame handles are made from the driver
+    arrays, so `hnsw_write` and the distributed probes take them
+    unchanged; `plain` is the same graph as lists."""
+    import numpy as np
+
+    pdf = nodes.select(
+        "vec_id", "vec", "level",
+        *[_init_hash_col("vec_id", F.lit(t)).alias(f"h{t}")
+          for t in range(INIT_TABLES)]).toPandas()
+    n = len(pdf)
+    order = np.argsort(pdf["vec_id"].to_numpy(np.int64), kind="stable")
+    ids = pdf["vec_id"].to_numpy(np.int64)[order]
+    level = pdf["level"].to_numpy(np.int64)[order]
+    H = np.array([pdf[f"h{t}"].to_numpy(np.int64)[order]
+                  for t in range(INIT_TABLES)]).reshape(INIT_TABLES, n)
+    XT = np.ascontiguousarray(np.array(
+        pdf["vec"].to_list(), dtype=np.float64).reshape(n, dim)[order].T)
+    nrm2 = np.zeros(n)
+    for row in XT:
+        nrm2 = nrm2 + row * row
+    nrm = np.sqrt(nrm2)
+    tops = ids[level >= big_l] if (level >= big_l).any() else ids
+    adj: dict[int, list] = {}
+    for lvl in range(big_l):
+        sub = np.flatnonzero(level >= lvl)
+        s, d = _np_layer_graph(np.ascontiguousarray(XT[:, sub]), nrm[sub],
+                               H[:, sub])
+        s, d = ids[sub][s], ids[sub][d]
+        order = np.lexsort((d, s))
+        adj[lvl] = list(zip(s[order].tolist(), d[order].tolist()))
+    t = nodes.schema["vec_id"].dataType.simpleString()
+    return {"L": big_l, "n": n, "route": "driver",
+            "tops": spark.createDataFrame([(i,) for i in tops.tolist()],
+                                          f"vec_id {t}"),
+            "adj": {lvl: spark.createDataFrame(p, f"src {t}, dst {t}")
+                    for lvl, p in adj.items()},
+            "plain": _plain_art(big_l, n, tops.tolist(), adj)}
+
+
 def hnsw_build(spark: SparkSession, corpus: DataFrame) -> dict:
-    """Build the layered graph COLLECT-FREE: returns
-    {L, n, tops: DataFrame, adj: {level: DataFrame}}. The only driver
-    round-trip is the ≤16-row level histogram that sizes L — every
-    layer's edge list stays a (localCheckpoint-materialized)
-    DataFrame, ready for `hnsw_write`'s bucket-partitioned parquet
-    artifact. `tops` is bounded TOP_MIN..TOP_MIN*16 rows by the L
-    rule, so it is broadcastable at any corpus size (and safe to
-    collect where a caller needs the id list)."""
+    """Build the layered graph. Returns {L, n, route, tops: DataFrame,
+    adj: {level: DataFrame}}; `tops` is bounded TOP_MIN..TOP_MIN*16
+    rows by the L rule, so it is broadcastable at any corpus size.
+
+    One job reads the level histogram, which sizes L and gives n and
+    dim; the size switch then picks the route, recorded as `route`:
+      driver — n·dim ≤ DRIVER_BUILD_MAX_VALUES: one more job collects
+               the vectors and `_np_layer_graph` builds every layer as
+               one vectorized pass. The artifact also carries `plain`
+               (the collect_art form), so callers need no read-back.
+      spark  — larger corpora: collect-free, every NN-Descent round a
+               join/groupBy and every layer's edge list a
+               (localCheckpoint-materialized) DataFrame.
+    Both routes produce bit-identical edges (pinned against each other
+    and the numpy twin in tests/test_hnsw.py)."""
     nodes = corpus.select("vec_id", "vec",
                           _level_col("vec_id").alias("level")).cache()
-    hist = {int(r.level): int(r.n) for r in
-            nodes.groupBy("level").agg(F.count("*").alias("n")).collect()}
+    hist_rows = (nodes.groupBy("level")
+                 .agg(F.count("*").alias("n"),
+                      F.max(F.size("vec")).alias("dim")).collect())
+    hist = {int(r.level): int(r.n) for r in hist_rows}
+    dim = max((int(r.dim) for r in hist_rows), default=0)
 
     def at_least(l: int) -> int:
         return sum(n for lv, n in hist.items() if lv >= l)
@@ -221,6 +420,10 @@ def hnsw_build(spark: SparkSession, corpus: DataFrame) -> dict:
     big_l = 1
     while at_least(big_l + 1) >= TOP_MIN:
         big_l += 1
+    if at_least(0) * dim <= DRIVER_BUILD_MAX_VALUES:
+        art = _driver_build(spark, nodes, big_l, dim)
+        nodes.unpersist()
+        return art
     if at_least(big_l) > 0:
         tops = nodes.where(F.col("level") >= big_l).select("vec_id")
     else:  # degenerate tiny corpus: flat, top layer = everyone
@@ -232,7 +435,8 @@ def hnsw_build(spark: SparkSession, corpus: DataFrame) -> dict:
         n = at_least(lvl)
         adj[lvl] = _layer_graph(layer, n)  # checkpointed, never collected
     nodes.unpersist()
-    return {"L": big_l, "n": at_least(0), "tops": tops, "adj": adj}
+    return {"L": big_l, "n": at_least(0), "route": "spark", "tops": tops,
+            "adj": adj}
 
 
 def collect_art(art: dict) -> dict:
@@ -274,7 +478,7 @@ def collect_art(art: dict) -> dict:
     adj = {lvl: [(int(r.src), int(r.dst)) for r in
                  e.select("src", "dst").orderBy("src", "dst").collect()]
            for lvl, e in art["adj"].items()}
-    return {"L": art["L"], "n": n, "tops": tops, "adj": adj}
+    return _plain_art(art["L"], n, tops, adj)
 
 
 def hnsw_write(art: dict, path: str) -> None:
@@ -468,10 +672,12 @@ _ART_CACHE: dict[tuple[str, str], dict] = {}
 
 def art_for(spark: SparkSession, sf_dir: str) -> dict:
     """Build-or-reuse the WRITTEN artifact for sf_dir: the graph is
-    built collect-free, materialized via hnsw_write into a session
-    temp dir, and handed back as hnsw_read's lazy handles — every
-    registered probe therefore exercises the real on-disk artifact
-    path (write → bucket-partitioned parquet → read)."""
+    built (either hnsw_build route), materialized via hnsw_write into
+    a session temp dir, and handed back as hnsw_read's lazy handles —
+    every registered probe therefore exercises the real on-disk
+    artifact path (write → bucket-partitioned parquet → read). The
+    build's `route`, and its `plain` lists when it ran on the driver,
+    ride along."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _ART_CACHE:
         import atexit
@@ -486,7 +692,9 @@ def art_for(spark: SparkSession, sf_dir: str) -> dict:
         # via hnsw_write directly and owns the lifecycle)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         hnsw_write(built, path)
-        _ART_CACHE[key] = hnsw_read(spark, path)
+        _ART_CACHE[key] = {**hnsw_read(spark, path),
+                           **{k: built[k] for k in ("route", "plain")
+                              if k in built}}
     return _ART_CACHE[key]
 
 
@@ -514,11 +722,12 @@ def session_art(spark: SparkSession, sf_dir: str) -> dict:
             "adj": {lvl: df.localCheckpoint(eager=False)
                     for lvl, df in art["adj"].items()},
         }
-        # Size switch (the D12 route pattern): small corpora collect
-        # the bounded artifact once and serve single queries from the
-        # driver-side beam; larger ones keep every edge distributed.
+        # Size switch (the D12 route pattern): small corpora serve
+        # single queries from the driver-side beam over the plain
+        # lists — the driver-built graph's own, else collected once
+        # from the artifact; larger ones keep every edge distributed.
         if art["n"] <= DRIVER_BEAM_MAX_NODES:
-            sart["plain"] = collect_art(art)
+            sart["plain"] = art.get("plain") or collect_art(art)
         _SESSION_ART[key] = sart
     return _SESSION_ART[key]
 
@@ -526,15 +735,26 @@ def session_art(spark: SparkSession, sf_dir: str) -> dict:
 def _score_ids(corpus: DataFrame, qcol: F.Column, ids) -> dict:
     """Cosine of the query against a bounded id set, computed by the
     SAME JVM fold the distributed probe (and the oracle's twin) uses —
-    the collected doubles are bit-identical to a full-plan run. A
-    broadcast id join beats an isin literal list (~2x: the In()
-    expression re-analyzes per call, the join plan shape is stable)."""
+    the collected doubles are bit-identical to a full-plan run (None
+    where the cosine is NULL: a zero-norm vector). A broadcast id join
+    beats an isin literal list (~2x: the In() expression re-analyzes
+    per call, the join plan shape is stable)."""
     spark = corpus.sparkSession
     idf = spark.createDataFrame([(int(i),) for i in ids], "vec_id bigint")
-    return {int(r.vec_id): float(r.score) for r in
+    return {int(r.vec_id): r.score for r in
             corpus.join(F.broadcast(idf), "vec_id")
                   .select("vec_id", D.cosine("vec", qcol).alias("score"))
                   .collect()}
+
+
+def _rank_key(score: float | None, i: int) -> tuple:
+    """Sort key of Spark's orderBy(score.desc(), id), which the
+    distributed probes use: NaN above every number, NULL last."""
+    if score is None:
+        return (2, 0.0, i)
+    if score != score:
+        return (0, 0.0, i)
+    return (1, -score, i)
 
 
 def hnsw_probe_driver(spark: SparkSession, corpus: DataFrame, art: dict,
@@ -549,12 +769,7 @@ def hnsw_probe_driver(spark: SparkSession, corpus: DataFrame, art: dict,
     hnsw_probe; equality pinned in tests/test_hnsw.py. Batch probing
     (many queries) uses hnsw_probe, which keeps state distributed."""
     _mark_route("hnsw_probe_driver")
-    adj: dict[int, dict[int, list[int]]] = {}
-    for lvl, pairs in art["adj"].items():
-        m: dict[int, list[int]] = {}
-        for s, d in pairs:
-            m.setdefault(s, []).append(d)
-        adj[lvl] = m
+    adj = art["nbrs"] if "nbrs" in art else _nbr_maps(art["adj"])
     qcol = F.array(*[F.lit(float(v)) for v in qvec])
     scores: dict[int, float] = {}
 
@@ -564,7 +779,7 @@ def hnsw_probe_driver(spark: SparkSession, corpus: DataFrame, art: dict,
             scores.update(_score_ids(corpus, qcol, new))
 
     def top(ids, lim: int) -> list[int]:
-        return sorted(ids, key=lambda i: (-scores[i], i))[:lim]
+        return sorted(ids, key=lambda i: _rank_key(scores[i], i))[:lim]
 
     ensure(art["tops"])
     f = top(art["tops"], HNSW_SEEDS)
@@ -738,7 +953,7 @@ def _score_pairs(corpus: DataFrame, queries: DataFrame,
                   .select("qid", "vec_id",
                           D.cosine("vec", "qvec").alias("score"))
                   .collect())
-    return {(int(r.qid), int(r.vec_id)): float(r.score) for r in rows}
+    return {(int(r.qid), int(r.vec_id)): r.score for r in rows}
 
 
 def hnsw_probe_batch_driver(spark: SparkSession, corpus: DataFrame,
@@ -753,12 +968,7 @@ def hnsw_probe_batch_driver(spark: SparkSession, corpus: DataFrame,
     materializations. Hop order and (-score, id) tie-breaks are
     identical to hnsw_probe_batch; equality pinned in tests."""
     _mark_route("hnsw_probe_batch_driver")
-    adj: dict[int, dict[int, list[int]]] = {}
-    for lvl, prs in art["adj"].items():
-        m: dict[int, list[int]] = {}
-        for s, d in prs:
-            m.setdefault(s, []).append(d)
-        adj[lvl] = m
+    adj = art["nbrs"] if "nbrs" in art else _nbr_maps(art["adj"])
     qids = [int(r.qid) for r in queries.select("qid").collect()]
     scores: dict[tuple[int, int], float] = {}
 
@@ -769,7 +979,7 @@ def hnsw_probe_batch_driver(spark: SparkSession, corpus: DataFrame,
             scores.update(_score_pairs(corpus, queries, new))
 
     def top(q: int, ids, lim: int) -> list[int]:
-        return sorted(ids, key=lambda i: (-scores[(q, i)], i))[:lim]
+        return sorted(ids, key=lambda i: _rank_key(scores[(q, i)], i))[:lim]
 
     tops = set(art["tops"])
     ensure({q: tops for q in qids})
@@ -1202,20 +1412,24 @@ def hnsw_merge_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TWIN_CACHE: dict[str, dict] = {}
 
 
-def _seq_cos(X, nrm, si, di):
+def _seq_cos(X, nrm, si, di) -> list:
     """Pairwise cosine with dimension-ordered float64 accumulation —
-    the exact left fold functions/distance.py evaluates JVM-side."""
+    the exact left fold functions/distance.py evaluates JVM-side —
+    and None where its try_divide meets a zero denominator."""
     import numpy as np
 
     acc = np.zeros(len(si), dtype=np.float64)
     for j in range(X.shape[1]):
         acc = acc + X[si, j] * X[di, j]
-    return acc / (nrm[si] * nrm[di])
+    den = nrm[si] * nrm[di]
+    return [None if z == 0 else float(a / z) for a, z in zip(acc, den)]
 
 
 def _twin_topm(scores, dsts):
+    """Best HNSW_M by (score DESC NULLS LAST, dst)."""
     order = sorted(range(len(dsts)),
-                   key=lambda i: (-scores[i], dsts[i]))
+                   key=lambda i: (scores[i] is None, -(scores[i] or 0.0),
+                                  dsts[i]))
     return [dsts[i] for i in order[:HNSW_M]]
 
 
@@ -1249,8 +1463,7 @@ def _twin_layer_edges(ids, X, nrm, idx_of):
         dsts = sorted(dset)
         si = [idx_of[src]] * len(dsts)
         di = [idx_of[d] for d in dsts]
-        sc = _seq_cos(X, nrm, si, di)
-        edges[src] = _twin_topm(list(sc), dsts)
+        edges[src] = _twin_topm(_seq_cos(X, nrm, si, di), dsts)
     if n <= ALL_PAIRS_MAX:  # exact already — mirror _layer_graph
         return sorted((s, d) for s, ds in edges.items() for d in ds)
     for _ in range(HNSW_ROUNDS):
@@ -1270,8 +1483,7 @@ def _twin_layer_edges(ids, X, nrm, idx_of):
             dsts = sorted(cand)
             si = [idx_of[src]] * len(dsts)
             di = [idx_of[d] for d in dsts]
-            sc = _seq_cos(X, nrm, si, di)
-            new_edges[src] = _twin_topm(list(sc), dsts)
+            new_edges[src] = _twin_topm(_seq_cos(X, nrm, si, di), dsts)
         edges = new_edges
     return sorted((s, d) for s, ds in edges.items() for d in ds)
 
@@ -1343,16 +1555,16 @@ def _twin_visited(art: dict, X, nrm, idx_of, q: int,
         for s, d in pairs:
             m.setdefault(s, []).append(d)
         adj[lvl] = m
-    scores: dict[int, float] = {}
+    scores: dict[int, float | None] = {}
 
-    def sc(i: int) -> float:
+    def sc(i: int) -> float | None:
         if i not in scores:
-            scores[i] = float(_seq_cos(X, nrm, [idx_of[i]],
-                                       [idx_of[q]])[0])
+            scores[i] = _seq_cos(X, nrm, [idx_of[i]], [idx_of[q]])[0]
         return scores[i]
 
     def top(ids, lim: int) -> list[int]:
-        return sorted(ids, key=lambda i: (-sc(i), i))[:lim]
+        return sorted(ids, key=lambda i: (sc(i) is None, -(sc(i) or 0.0),
+                                          i))[:lim]
 
     f = top(art["tops"], HNSW_SEEDS)
     for lvl in range(art["L"] - 1, 0, -1):
@@ -1408,7 +1620,7 @@ def _twin_merge_parts(ids, X, nrm, idx_of, lvl,
             ds = sorted(dset)
             scv = _seq_cos(X, nrm, [idx_of[src]] * len(ds),
                            [idx_of[d] for d in ds])
-            return _twin_topm(list(scv), ds)
+            return _twin_topm(scv, ds)
 
         new_out = {q: topm(q, ds) for q, ds in cand.items() if ds}
         rev: dict[int, set[int]] = {}

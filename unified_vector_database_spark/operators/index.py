@@ -12,9 +12,10 @@ Weaviate/ES HNSW-class, FAISS SQ8):
 - SQ8 scalar quantization: per-dim min/max -> uint8 codes; 4x memory
   cut for array<float> -> array<tinyint>, rerank on exact vectors.
 
-HNSW itself is deliberately NOT ported: a navigable graph is a
-pointer-chasing single-node structure; its batch-engine equivalent is
-exactly the cell/bucket pruning above (see SURVEY §4 design rules).
+HNSW lives in operators/hnsw.py: a layered graph built by NN-Descent
+— on the driver as one numpy pass for corpora up to
+DRIVER_BUILD_MAX_VALUES vector components, as join/groupBy rounds
+above that — and probed by a fixed-depth beam search.
 """
 
 from __future__ import annotations
